@@ -21,8 +21,9 @@ import os
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from lyra_spark import checkpoint as ckpt
+from lyra_spark import fused
 from lyra_spark import io as lio
-from lyra_spark.presets import transcript_ruleset, validate_transcripts
+from lyra_spark.presets import sink_verdicts, transcript_ruleset, validate_transcripts
 from lyra_spark.session import get_spark
 
 
@@ -40,25 +41,6 @@ DEFAULT_TRANSITIONS = {
     ("tool", "tool"),
     ("user", "tool"),
 }
-
-
-def rule_ids(
-    ruleset, check_transitions: bool = False, check_placement: bool = False
-) -> list[str]:
-    """Suite rule ids: the row rules plus the dataset checks (the same grid
-    run_suite uses); + the transition/placement rules when their flags are on."""
-    from lyra_spark.checks import MONO_RULE, PLACEMENT_RULE, TRANSITION_RULE, UNIQ_RULE
-    from lyra_spark.fused import REF_RULE
-
-    ids = [r.rule_id for r in ruleset.checks]
-    for extra in (REF_RULE, UNIQ_RULE, MONO_RULE):
-        if extra not in ids:
-            ids.append(extra)
-    if check_transitions:
-        ids.append(TRANSITION_RULE)
-    if check_placement:
-        ids.append(PLACEMENT_RULE)
-    return ids
 
 
 def main(argv: list[str] | None = None, catalog: "lio.TableCatalog | None" = None) -> int:
@@ -324,27 +306,16 @@ def main(argv: list[str] | None = None, catalog: "lio.TableCatalog | None" = Non
             args.check_placement = True
             placement_ts = chk["ts_col"]
 
-    clean_rules = clean_ds_rules = None
-    if args.clean_out or args.quarantine_out:
-        # loop-invariant: inline_referential_rule collects the dim ONCE here;
-        # building it inside validate_partition would re-run that collect per
-        # partition (1e5 identical driver-blocking jobs at the design point)
-        from lyra_spark.checks import (
-            MONO_RULE,
-            PLACEMENT_RULE,
-            TRANSITION_RULE,
-            UNIQ_RULE,
-        )
-        from lyra_spark.fused import inline_referential_rule
-        from lyra_spark.rules import RuleSet
-
-        clean_rules = RuleSet(ruleset.rules + [inline_referential_rule(dim)])
-        clean_ds_rules = (
-            [UNIQ_RULE, MONO_RULE]
-            + ([TRANSITION_RULE] if args.check_transitions else [])
-            + ([PLACEMENT_RULE] if args.check_placement else [])
-        )
-
+    # Loop-invariant suite plan: the referential rule compiles ONCE here
+    # (suite_rules collects the dim; per-partition inlining would re-run
+    # that collect for every partition), and only when a partition is
+    # pending, so a resume pass launches no job for it. The manifest keeps
+    # fingerprinting the user's ``ruleset``.
+    grid = fused.suite_grid(ruleset, args.check_transitions, args.check_placement)
+    compiled = fused.suite_rules(ruleset, dim) if pending else ruleset
+    # the grid's dataset-check rules: clean/quarantine take their keys from
+    # the violation set, the row rules filter map-only on the scan
+    ds_rules = [r for r in grid[0] if r not in {c.rule_id for c in compiled.checks}]
 
     def verdict_gate(vrows) -> bool:
         """The partition's ACTUAL gate from its collected verdict grid —
@@ -365,49 +336,24 @@ def main(argv: list[str] | None = None, catalog: "lio.TableCatalog | None" = Non
         return ok
 
     def validate_partition(pk: str) -> tuple[str, int, int, bool, float]:
-        from lyra_spark.engine import ruleset_severities, ruleset_tolerances
-
         t0 = time.perf_counter()
         scoped = lio.partition_scope(df, pk)
         # transitions fuse into the suite's single conv exchange and placement
         # into its row-rule scan — no separate scan or shuffle per partition
         # for either dataset check
         result = validate_transcripts(
-            scoped, dim, ruleset=ruleset,
+            scoped, dim, ruleset=compiled,
             transitions=transitions if args.check_transitions else None,
             allowed_first=allowed_first,
             placement_ts=placement_ts if args.check_placement else None,
         )
         if args.out:
-            # write-then-reuse: violations compute once into the sink; the
-            # verdict roll-up aggregates the WRITTEN files (never recomputes)
-            out_pk = f"{args.out}/part={pk}"
-            lio.write_violations(result.violations, out_pk, partition_col="part_date")
-            # explicit schema: a clean partition's sink holds only _SUCCESS and
-            # schema inference would throw UNABLE_TO_INFER_SCHEMA
-            viol = spark.read.schema(result.violations.schema).parquet(out_pk)
-            if meta_counts is not None and pk in meta_counts:
-                # row count from table metadata + violation counts from the
-                # tiny written sink — no rescan of the partition for counting
-                from lyra_spark.presets import verdicts_from_metadata
-
-                verd = verdicts_from_metadata(
-                    scoped, viol,
-                    rule_ids(ruleset, args.check_transitions, args.check_placement),
-                    "part_date", {pk: meta_counts[pk]},
-                    severities=ruleset_severities(ruleset),
-                    tolerances=ruleset_tolerances(ruleset),
-                )
-            else:
-                from lyra_spark.engine import compute_verdicts
-
-                verd = compute_verdicts(
-                    scoped, viol,
-                    rule_ids(ruleset, args.check_transitions, args.check_placement),
-                    "part_date",
-                    severities=ruleset_severities(ruleset),
-                    tolerances=ruleset_tolerances(ruleset),
-                )
+            # write-then-reuse, row counts from table metadata when it has
+            # this partition — no rescan of the partition for counting
+            counts = {pk: meta_counts[pk]} if meta_counts is not None and pk in meta_counts else None
+            viol, verd = sink_verdicts(
+                scoped, result.violations, f"{args.out}/part={pk}", grid, "part_date", counts
+            )
         else:
             # both dataset checks are fused into the suite, so its verdict
             # grid is already complete — no rebuild pass needed
@@ -422,12 +368,12 @@ def main(argv: list[str] | None = None, catalog: "lio.TableCatalog | None" = Non
             # windowed branch — still ≪ a second full suite)
             src = viol if args.out else result.violations
             ds_keys = (
-                src.filter(F.col("rule_id").isin(*clean_ds_rules))
+                src.filter(F.col("rule_id").isin(*ds_rules))
                 .select("conv_id", "turn_idx")
                 .distinct()
             )
             if args.clean_out:
-                clean = clean_rows(scoped, clean_rules).join(
+                clean = clean_rows(scoped, compiled).join(
                     F.broadcast(ds_keys), ["conv_id", "turn_idx"], "left_anti"
                 )
                 clean.write.mode("overwrite").parquet(os.path.join(args.clean_out, f"part={pk}"))
@@ -440,7 +386,7 @@ def main(argv: list[str] | None = None, catalog: "lio.TableCatalog | None" = Non
                     ["conv_id", "turn_idx"], "left",
                 )
                 quar = quarantine_rows(
-                    marked, clean_rules, extra_fail=[F.col("__ds_fail")]
+                    marked, compiled, extra_fail=[F.col("__ds_fail")]
                 ).drop("__ds_fail")
                 quar.write.mode("overwrite").parquet(
                     os.path.join(args.quarantine_out, f"part={pk}")

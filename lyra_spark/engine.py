@@ -14,7 +14,6 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from lyra_spark.compiler import apply_coercions, compile_checks
 from lyra_spark.rules import RuleSet
@@ -52,9 +51,6 @@ class ValidationResult:
     def violations_sorted(self) -> DataFrame:
         """Stable (conv_id, turn_idx, rule_id) ordering — the byte-match contract."""
         return self.violations.orderBy(*self.key_cols, "rule_id", "observed_value")
-
-    def unpersist(self) -> None:
-        self.violations.unpersist()
 
 
 def row_violations(
@@ -318,7 +314,6 @@ def validate(
     partition_col: str | None = "part_date",
     extra_violations: list[DataFrame] | None = None,
     extra_rule_ids: list[str] | None = None,
-    persist: bool = False,
     messages: bool = False,
     abort_early: bool = False,
 ) -> ValidationResult:
@@ -337,8 +332,6 @@ def validate(
         if messages and "message" not in ev.columns:
             ev = ev.withColumn("message", F.concat(F.lit('"'), F.col("rule_id"), F.lit('" failed')))
         viol = viol.unionByName(ev)
-    if persist:
-        viol = viol.persist(StorageLevel.MEMORY_AND_DISK)
     rule_ids = [r.rule_id for r in ruleset.checks] + list(extra_rule_ids or [])
     verd = (
         compute_verdicts(df, viol, rule_ids, partition_col,

@@ -14,13 +14,16 @@ The composable operators in checks.py each scan the table; correct, but at
                          via lag over (conv_id; turn_idx, ts) — one exchange
                          instead of two.
 
-Caveats vs the composable variants (kept, documented):
-  * checks.uniqueness_violations (salted two-phase agg) is the right shape
-    when duplicate multiplicity itself is skewed; the window variant puts one
-    conversation in one task, which the BASELINE accepts for monotone anyway
-    (hot conv ≈ 10% of rows — bounded).
-  * checks.referential_violations (broadcast anti-join) is the right shape for
-    dimensions too big to inline as literals (≳ thousands of values).
+This is the only suite plan: presets.validate_transcripts, presets.run_suite
+and jobs/validate.py all run it, and ``suite_rules``/``suite_grid`` here are
+the one place the referential rule is inlined and the verdict grid's rule
+ids, severities and tolerances are derived. The composable operators in
+checks.py remain as the test oracle and as registry queries. Limits of this
+plan: the window variant puts one conversation bucket in one task (the
+salted aggregate of checks.uniqueness_violations handles skewed duplicate
+multiplicity better), and inlining the dim as literals suits dimensions of
+up to thousands of values (checks.referential_violations' broadcast
+anti-join handles larger ones).
 """
 
 from __future__ import annotations
@@ -38,7 +41,13 @@ from lyra_spark.checks import (
     transition_predicate,
     transition_state,
 )
-from lyra_spark.engine import ValidationResult, compute_verdicts, row_violations
+from lyra_spark.engine import (
+    ValidationResult,
+    compute_verdicts,
+    row_violations,
+    ruleset_severities,
+    ruleset_tolerances,
+)
 from lyra_spark.rules import RuleSet, enum
 from lyra_spark.schema import KEY_COLUMNS, PARTITION_COLUMN
 
@@ -51,6 +60,34 @@ def inline_referential_rule(df_dim: DataFrame, fk_col: str = "tool", dim_col: st
     broadcast join would ship, minus the join machinery."""
     values = [r[0] for r in df_dim.select(dim_col).distinct().collect()]
     return enum(fk_col, values, rule_id=rule_id)
+
+
+def suite_rules(ruleset: RuleSet, tools_dim: DataFrame) -> RuleSet:
+    """``ruleset`` with the referential check inlined from ``tools_dim`` — or
+    ``ruleset`` itself when it already carries one (a caller that compiled
+    it once before a loop). The inline collects the dim: one Spark job."""
+    if any(r.rule_id == REF_RULE for r in ruleset.rules):
+        return ruleset
+    return RuleSet(ruleset.rules + [inline_referential_rule(tools_dim)])
+
+
+def suite_grid(
+    ruleset: RuleSet, check_transitions: bool = False, check_placement: bool = False
+) -> tuple[list[str], dict[str, str] | None, dict[str, float] | None]:
+    """(rule ids, severities, tolerances) of the suite's verdict grid: the
+    ruleset's checks, then the referential, uniqueness and monotone rules
+    when absent, then the transition and placement rules when enabled.
+    ``ruleset`` may be given with or without the referential rule inlined
+    (the inlined rule has default severity and tolerance)."""
+    ids = [r.rule_id for r in ruleset.checks]
+    for extra in (REF_RULE, UNIQ_RULE, MONO_RULE):
+        if extra not in ids:
+            ids.append(extra)
+    if check_transitions:
+        ids.append(TRANSITION_RULE)
+    if check_placement:
+        ids.append(PLACEMENT_RULE)
+    return ids, ruleset_severities(ruleset), ruleset_tolerances(ruleset)
 
 
 def conv_scoped_violations(
@@ -278,7 +315,6 @@ def validate_transcripts_fused(
     ruleset: RuleSet,
     partition_col: str = PARTITION_COLUMN,
     key_cols: list[str] = KEY_COLUMNS,
-    persist: bool = False,
     bucket_turns: int = 4096,
     partition_from_ts: bool = True,
     transitions: set | None = None,
@@ -298,13 +334,11 @@ def validate_transcripts_fused(
     (the standard Iceberg days(ts) layout), which lets the conv checks share
     ONE sort (see conv_scoped_violations). Pass False when part_date does not
     derive from ts — equal-turn_idx ties then order by (turn_idx, ts) exactly
-    as the composable monotone check does."""
-    from pyspark.storagelevel import StorageLevel
+    as the composable monotone check does.
 
-    if any(r.rule_id == REF_RULE for r in ruleset.rules):
-        fused_rules = ruleset  # caller pre-compiled the referential rule
-    else:
-        fused_rules = RuleSet(ruleset.rules + [inline_referential_rule(tools_dim)])
+    The referential rule is inlined from ``tools_dim`` (one collect) unless
+    ``ruleset`` already carries it — see suite_rules."""
+    fused_rules = suite_rules(ruleset, tools_dim)
     extra_checks = None
     if placement_ts is not None:
         # Placement is a STORAGE-integrity check: it must judge the value as
@@ -329,16 +363,6 @@ def validate_transcripts_fused(
     # column order must match for union
     cols = [*key_cols, partition_col, "rule_id", "observed_value"]
     viol = row_v.select(*cols).unionByName(conv_v.select(*cols))
-    if persist:
-        viol = viol.persist(StorageLevel.MEMORY_AND_DISK)
-    rule_ids = [r.rule_id for r in fused_rules.checks] + [UNIQ_RULE, MONO_RULE]
-    if transitions is not None:
-        rule_ids.append(TRANSITION_RULE)
-    if placement_ts is not None:
-        rule_ids.append(PLACEMENT_RULE)
-    from lyra_spark.engine import ruleset_severities, ruleset_tolerances
-
-    verd = compute_verdicts(df, viol, rule_ids, partition_col,
-                            severities=ruleset_severities(fused_rules),
-                            tolerances=ruleset_tolerances(fused_rules))
+    rule_ids, sev, tol = suite_grid(fused_rules, transitions is not None, placement_ts is not None)
+    verd = compute_verdicts(df, viol, rule_ids, partition_col, severities=sev, tolerances=tol)
     return ValidationResult(violations=viol, verdicts=verd, key_cols=list(key_cols), partition_col=partition_col)

@@ -9,6 +9,7 @@ only by its error message here, by design.
 
 from __future__ import annotations
 
+import logging
 import os
 import threading
 import urllib.parse
@@ -17,6 +18,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lyra_spark.schema import PARTITION_COLUMN
+
+log = logging.getLogger(__name__)
 
 # Serializes the session-global AQE-conf set/restore in write_violations'
 # auto mode: concurrent writers (jobs/validate --concurrency>1) could
@@ -29,10 +32,11 @@ HIVE_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 
 
 def _conf_bytes(value: str) -> int:
-    """Parse a Spark byte-size conf ('134217728', '128m', '64KB') to bytes."""
+    """Parse a Spark byte-size conf ('134217728', '128m', '64KB', '1t') to bytes."""
     v = value.strip().lower()
     for suffix, mult in (("kb", 1 << 10), ("k", 1 << 10), ("mb", 1 << 20), ("m", 1 << 20),
-                         ("gb", 1 << 30), ("g", 1 << 30), ("b", 1)):
+                         ("gb", 1 << 30), ("g", 1 << 30), ("tb", 1 << 40), ("t", 1 << 40),
+                         ("pb", 1 << 50), ("p", 1 << 50), ("b", 1)):
         if v.endswith(suffix):
             return int(float(v[: -len(suffix)])) * mult
     return int(v)
@@ -68,11 +72,11 @@ def planned_scan_tasks(df: DataFrame) -> int | None:
     """
     try:
         files = df.inputFiles()
+        mpb = _conf_bytes(df.sparkSession.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
     except Exception:
         return None
     if not files:
         return None
-    mpb = _conf_bytes(df.sparkSession.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
     non_splittable = (".gz", ".zip", ".deflate", ".zst", ".bz2", ".xz", ".lz4", ".snappy")
     tasks = 0
     for uri in files:
@@ -435,7 +439,7 @@ class IcebergTableCatalog(TableCatalog):
             # dependency — an unpartitioned table, a differently-named
             # partition field, or absent metadata tables must degrade to
             # the scan path, not crash the run
-            print(f"[lyra] WARNING: catalog snapshot query failed ({e}); continuing without")
+            log.warning("catalog snapshot query failed (%s); continuing without", e)
             return None
         return str(rows[0][0]) if rows else None
 
@@ -449,14 +453,14 @@ class IcebergTableCatalog(TableCatalog):
         try:
             return sorted(str(r["key"]) for r in self._partition_rows())
         except Exception as e:
-            print(f"[lyra] WARNING: catalog partition listing failed ({e}); falling back to scan")
+            log.warning("catalog partition listing failed (%s); falling back to scan", e)
             return None
 
     def partition_record_counts(self) -> dict[str, int] | None:
         try:
             return {str(r["key"]): int(r["record_count"]) for r in self._partition_rows()}
         except Exception as e:
-            print(f"[lyra] WARNING: catalog record counts failed ({e}); falling back to scan")
+            log.warning("catalog record counts failed (%s); falling back to scan", e)
             return None
 
     def partition_ts_range(self, ts_col: str) -> dict[str, tuple] | None:

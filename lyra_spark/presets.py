@@ -9,8 +9,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from lyra_spark import checks
-from lyra_spark.engine import ValidationResult, validate
+from lyra_spark import fused
+from lyra_spark import io as lio
+from lyra_spark.engine import ValidationResult, compute_verdicts
 from lyra_spark.rules import RuleSet, enum, nonempty, range_rule, required
 from lyra_spark.schema import ROLE_ENUM
 
@@ -31,83 +32,41 @@ def validate_transcripts(
     tools_dim: DataFrame,
     partition_col: str | None = "part_date",
     ruleset: RuleSet | None = None,
-    fused: bool = True,
-    persist: bool = False,
     partition_from_ts: bool = True,
     transitions: set | None = None,
     allowed_first: set | None = None,
     placement_ts: str | None = None,
 ) -> ValidationResult:
-    """Full suite: row rules + uniqueness + referential + monotone ordering.
+    """Full suite: row rules + referential + uniqueness + monotone ordering,
+    as the two-pass plan of lyra_spark.fused — one scan for all row rules with
+    the tools dim inlined, one conv_id exchange for the per-conversation
+    checks.
 
     ``transitions`` (an allowed (prev_role, role) pair set) adds the
-    sequence-structure check on BOTH paths: fused into the single conv
-    exchange (lyra_spark.fused), or as the composable window operator;
-    ``allowed_first`` constrains each conversation's first role.
-    ``placement_ts`` (a ts column name) adds the partition-placement check:
-    fused into the row-rule scan, or as the composable map-only operator.
+    sequence-structure check to the conv exchange; ``allowed_first``
+    constrains each conversation's first role. ``placement_ts`` (a ts column
+    name) adds the partition-placement check to the row-rule scan.
 
-    fused=True (default): two-pass plan — one scan for all row rules with the
-    tools dim inlined, one conv_id exchange for uniqueness+monotone
-    (lyra_spark.fused). fused=False: the composable operators (salted
-    aggregate, broadcast anti-join, window) — same results, more passes; the
-    right choice when the dim is large or duplicate multiplicity is skewed.
+    The plan keys its exchange and verdict grid on ``partition_col``, so
+    ``partition_col=None`` raises ValueError.
 
-    partition_from_ts (fused path only): set False when the table layout does
-    NOT guarantee part_date = date(ts); the fused conv checks then order
-    equal-turn_idx ties by (turn_idx, ts), identical to the composable path,
-    at the cost of one extra sort.
+    partition_from_ts: set False when the table layout does NOT guarantee
+    part_date = date(ts); the conv checks then order equal-turn_idx ties by
+    (turn_idx, ts), at the cost of one extra sort.
 
-    persist defaults to False: caching the violation union forces the cached
-    plan to materialize WITHOUT adaptive execution (no exchange reuse, no
-    coalescing), which measured ~2x slower than simply recomputing — prefer
-    run_suite(), which writes violations to their real sink once and
-    aggregates verdicts from the written files."""
-    ruleset = ruleset or transcript_ruleset()
-    # placement compares event time AGAINST the partition value — without a
-    # partition column the check has no referent on either path; raise the
-    # contract violation here instead of an opaque planner error
-    if placement_ts is not None and partition_col is None:
-        raise ValueError("placement_ts requires a partition column (partition_col=None)")
-    # the fused plan keys its shared exchange and verdict grid on the
-    # partition column; with partition_col=None only the composable path is
-    # well-defined — route there instead of crashing mid-plan
-    if fused and partition_col is None:
-        fused = False
-    if fused:
-        from lyra_spark.fused import validate_transcripts_fused
-
-        return validate_transcripts_fused(
-            df, tools_dim, ruleset, partition_col=partition_col, persist=persist,
-            partition_from_ts=partition_from_ts, transitions=transitions,
-            allowed_first=allowed_first, placement_ts=placement_ts,
-        )
-    extra = [
-        checks.uniqueness_violations(df, partition_col=partition_col),
-        checks.referential_violations(df, tools_dim, partition_col=partition_col),
-        checks.monotone_violations(df, partition_col=partition_col),
-    ]
-    extra_ids = [checks.UNIQ_RULE, checks.REF_RULE, checks.MONO_RULE]
-    if transitions is not None:
-        extra.append(
-            checks.transition_violations(
-                df, transitions, allowed_first=allowed_first,
-                partition_col=partition_col, ts_col="ts",
-            )
-        )
-        extra_ids.append(checks.TRANSITION_RULE)
-    if placement_ts is not None:
-        extra.append(
-            checks.misplaced_violations(df, ts_col=placement_ts, partition_col=partition_col)
-        )
-        extra_ids.append(checks.PLACEMENT_RULE)
-    return validate(
-        df,
-        ruleset,
-        partition_col=partition_col,
-        extra_violations=extra,
-        extra_rule_ids=extra_ids,
-        persist=persist,
+    The result is lazy: each action on it recomputes the suite. Prefer
+    run_suite(), which writes violations to their sink once and aggregates
+    verdicts from the written files."""
+    if partition_col is None:
+        # placement compares event time AGAINST the partition value, and the
+        # plan keys its shared exchange and verdict grid on the partition
+        # column — raise the contract violation here, not a planner error
+        what = "placement_ts" if placement_ts is not None else "validate_transcripts"
+        raise ValueError(f"{what} requires a partition column (partition_col=None)")
+    return fused.validate_transcripts_fused(
+        df, tools_dim, ruleset or transcript_ruleset(), partition_col=partition_col,
+        partition_from_ts=partition_from_ts, transitions=transitions,
+        allowed_first=allowed_first, placement_ts=placement_ts,
     )
 
 
@@ -118,62 +77,62 @@ def run_suite(
     partition_col: str = "part_date",
     ruleset: RuleSet | None = None,
     input_path: str | None = None,
-    check_placement: bool = False,
     transitions: set | None = None,
     allowed_first: set | None = None,
-    placement_ts: str = "ts",
+    placement_ts: str | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Write-then-reuse execution of the full suite — the production shape.
 
-    Violations compute ONCE and land in their real parquet sink (sorted,
-    deterministic); verdict counts aggregate from the WRITTEN files instead of
-    recomputing the pipeline or caching it (a cached union materializes
-    without adaptive execution — measured ~2x slower than this). Returns
-    (violations read back, verdicts).
+    Runs validate_transcripts, then sink_verdicts: violations compute ONCE
+    and land in their parquet sink; verdict counts aggregate from the
+    WRITTEN files instead of recomputing the pipeline. Returns (violations
+    read back, verdicts).
 
-    ``check_placement``: also run the partition-placement check (date(ts)
-    must equal the partition value — checks.placement_check, fused into the
-    row-rule scan rather than a third pass over the table); its violations
-    merge into the sink and the verdict grid, exactly as the CLI
-    --check-placement does. ``transitions``: an allowed (prev_role, role)
-    set enables the sequence-structure check the same way — fused into the
-    suite's single conv exchange (zero extra shuffles), not a separate pass.
+    ``transitions``/``allowed_first`` and ``placement_ts`` enable the
+    sequence-structure and partition-placement checks as in
+    validate_transcripts (the CLI's --check-transitions/--check-placement);
+    their violations merge into the sink and the verdict grid.
 
-    ``input_path``: the Hive-partitioned parquet dir ``df`` reads, UNFILTERED.
-    When given, per-partition row counts come from table METADATA (parquet
-    footers here; Iceberg manifest record-counts in prod) and the verdict grid
-    is assembled driver-side from the two tiny count sets — no second data
-    scan and no join stages. Without it, verdicts fall back to the
-    distributed compute_verdicts roll-up."""
-    from lyra_spark import io as lio
-    from lyra_spark.checks import MONO_RULE, PLACEMENT_RULE, TRANSITION_RULE, UNIQ_RULE
-    from lyra_spark.engine import compute_verdicts
-    from lyra_spark.fused import REF_RULE, validate_transcripts_fused
-
+    ``input_path``: the table ``df`` reads, UNFILTERED. When given,
+    per-partition row counts come from its TableCatalog (parquet footers
+    here; Iceberg manifest record counts in prod) and the verdict grid is
+    assembled driver-side — no second data scan. Without it, or when the
+    catalog serves no counts, verdicts fall back to the distributed
+    compute_verdicts roll-up."""
     ruleset = ruleset or transcript_ruleset()
-    res = validate_transcripts_fused(
-        df, tools_dim, ruleset, partition_col=partition_col, persist=False,
-        transitions=transitions, allowed_first=allowed_first,
-        placement_ts=placement_ts if check_placement else None,
+    res = validate_transcripts(
+        df, tools_dim, partition_col=partition_col, ruleset=ruleset,
+        transitions=transitions, allowed_first=allowed_first, placement_ts=placement_ts,
     )
-    violations = res.violations
+    counts = (
+        lio.catalog_for(df.sparkSession, input_path, partition_col).partition_record_counts()
+        if input_path
+        else None
+    )
+    grid = fused.suite_grid(ruleset, transitions is not None, placement_ts is not None)
+    return sink_verdicts(df, res.violations, out_dir, grid, partition_col, counts)
+
+
+def sink_verdicts(
+    df: DataFrame,
+    violations: DataFrame,
+    out_dir: str,
+    grid: tuple[list[str], dict[str, str] | None, dict[str, float] | None],
+    partition_col: str,
+    counts: dict[str, int] | None,
+) -> tuple[DataFrame, DataFrame]:
+    """The suite's one sink-then-verdict step (run_suite and the validate
+    CLI's --out): write ``violations`` to ``out_dir``, read the sink back,
+    and build the verdict grid for ``grid`` (fused.suite_grid) over ``df``.
+
+    With ``counts`` (partition key → row count from table metadata) the grid
+    is verdicts_from_metadata; with None it is the distributed
+    compute_verdicts roll-up, which scans ``df`` for row counts."""
     lio.write_violations(violations, out_dir, partition_col=partition_col)
     # explicit schema: a clean run writes only _SUCCESS (no parquet files) and
     # schema inference would throw UNABLE_TO_INFER_SCHEMA on the empty sink
     viol = df.sparkSession.read.schema(violations.schema).parquet(out_dir)
-    rule_ids = [r.rule_id for r in ruleset.checks]
-    for extra in (REF_RULE, UNIQ_RULE, MONO_RULE):
-        if extra not in rule_ids:
-            rule_ids.append(extra)
-    if transitions is not None:
-        rule_ids.append(TRANSITION_RULE)
-    if check_placement:
-        rule_ids.append(PLACEMENT_RULE)
-    from lyra_spark.engine import ruleset_severities, ruleset_tolerances
-
-    sev = ruleset_severities(ruleset)
-    tol = ruleset_tolerances(ruleset)
-    counts = lio.partition_row_counts(input_path, partition_col) if input_path else None
+    rule_ids, sev, tol = grid
     if counts is None:
         verd = compute_verdicts(df, viol, rule_ids, partition_col, severities=sev, tolerances=tol)
     else:

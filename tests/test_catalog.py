@@ -64,6 +64,23 @@ def test_catalog_for_dispatches_on_uri(spark):
     assert ic.table == "prod.transcripts"
 
 
+def test_iceberg_catalog_fallbacks_log_a_warning(spark, caplog):
+    """Without Iceberg metadata tables every catalog method degrades to None
+    (the scan path), and each fallback is logged once through ``logging``."""
+    import logging
+
+    cat = lio.catalog_for(spark, "iceberg:nope.t")
+    with caplog.at_level(logging.WARNING, logger="lyra_spark.io"):
+        assert cat.snapshot_id() is None
+        assert cat.partitions() is None
+        assert cat.partition_record_counts() is None
+        assert cat.partition_ts_range("ts") is None
+    msgs = [r.getMessage() for r in caplog.records if r.name == "lyra_spark.io"]
+    assert len(msgs) == 3, msgs
+    for what in ("snapshot query", "partition listing", "record counts"):
+        assert sum(what in m for m in msgs) == 1, msgs
+
+
 @pytest.fixture()
 def table_and_counts(fixtures_sf0001):
     table = os.path.join(fixtures_sf0001, "transcripts")

@@ -100,7 +100,6 @@ def test_violation_sink_deterministic(tmp_path, spark, fixtures_sf0001):
         res = validate_transcripts(tdf, dim)
         out = str(tmp_path / f"v{i}")
         lio.write_violations(res.violations_sorted(), out)
-        res.unpersist()
         pdf = pd.read_parquet(out).reset_index(drop=True)
         outs.append(pdf)
     pd.testing.assert_frame_equal(outs[0], outs[1])
@@ -207,13 +206,14 @@ def test_cli_marginal_jobs_per_partition(tmp_path, spark, fixtures_sf0001):
     two = jobs_for("j2", 2)
     marginal = two - one
     # Actions per partition: sink write + tiny sink-file verdict aggregate +
-    # LOCAL verdict write (dim broadcast collects ride along). AQE
-    # materializes each query stage as a tracked job, so the action count is
-    # amplified ~3x: measured 10 on this fixed fixture (deterministic) since
-    # the --out verdict roll-up switched to metadata row counts; the former
-    # compute_verdicts partition rescan put it at 13, and the r2 sink re-read
-    # 4+ above that — this bound pins both fixes.
-    assert marginal <= 10, f"marginal jobs per partition = {marginal}"
+    # LOCAL verdict write. AQE materializes each query stage as a tracked
+    # job, so the action count is amplified ~3x: measured 8 on this fixed
+    # fixture (deterministic) since the tools-dim collect that inlines the
+    # referential rule runs once before the loop instead of per partition
+    # (10 before that; the former compute_verdicts partition rescan put it
+    # at 13, and the r2 sink re-read 4+ above that) — this bound pins all
+    # three fixes.
+    assert marginal <= 8, f"marginal jobs per partition = {marginal}"
 
 
 def test_cli_hll_blobs_persist_and_merge(tmp_path, spark, fixtures_sf0001, capsys):
@@ -336,6 +336,58 @@ def test_run_suite_metadata_verdicts_match_distributed(tmp_path, spark, fixtures
     b = b[a.columns]
     pd.testing.assert_frame_equal(a, b)
     assert len(a) > 0
+
+
+def test_cli_out_agrees_with_run_suite(tmp_path, spark, fixtures_sf0001):
+    """The validate CLI's --out loop and run_suite run one plan and one
+    sink-then-verdict step: for each partition the CLI validated, its sink
+    rows and verdict parquet equal run_suite's on that partition's scope,
+    with the transition and placement checks on. (The scope matters: the
+    CLI checks each partition alone, so a conversation crossing a partition
+    boundary is not sequenced across it, while run_suite over the whole
+    table does sequence it.)"""
+    from functools import reduce
+
+    from jobs.validate import DEFAULT_TRANSITIONS, main
+    from lyra_spark.presets import run_suite
+
+    table = os.path.join(fixtures_sf0001, "transcripts")
+    dim_path = os.path.join(fixtures_sf0001, "tools_dim.parquet")
+    out, ck = tmp_path / "viol", tmp_path / "ck"
+    assert main([
+        "--table", table, "--tools-dim", dim_path, "--checkpoint", str(ck),
+        "--run-id", "agree", "--out", str(out), "--limit-partitions", "2",
+        "--check-transitions", "--check-placement",
+    ]) == 0
+    parts = sorted(p.name.split("=", 1)[1] for p in out.glob("part=*"))
+    assert len(parts) == 2
+
+    tdf, dim = spark.read.parquet(table), spark.read.parquet(dim_path)
+    vcols = ["conv_id", "turn_idx", "part_date", "rule_id", "observed_value"]
+    gkey = ["part_date", "rule_id"]
+    got_v, want_v, got_g, want_g = [], [], [], []
+    for pk in parts:
+        viol, verd = run_suite(
+            lio.partition_scope(tdf, pk), dim, str(tmp_path / f"suite-{pk}"),
+            input_path=table, transitions=DEFAULT_TRANSITIONS, placement_ts="ts",
+        )
+        want_v.append(viol.select(vcols))
+        got_v.append(spark.read.schema(viol.schema).parquet(str(out / f"part={pk}")).select(vcols))
+        cli_verd = spark.read.parquet(str(ck / "agree" / "verdicts" / f"part={pk}"))
+        got_g.append(cli_verd)
+        want_g.append(verd.filter(verd["part_date"].cast("string") == pk).select(cli_verd.columns))
+
+    def frame(dfs, key):
+        df = reduce(lambda a, b: a.unionByName(b), dfs)
+        return df.toPandas().sort_values(key, ignore_index=True)
+
+    a, b = frame(got_v, vcols), frame(want_v, vcols)
+    assert len(a) > 0
+    pd.testing.assert_frame_equal(a, b)
+    a, b = frame(got_g, gkey), frame(want_g, gkey)
+    assert len(a) == 2 * a["rule_id"].nunique()
+    assert {"partition_placement", "role_transition"} <= set(a["rule_id"])
+    pd.testing.assert_frame_equal(a, b)
 
 
 def test_partition_row_counts_matches_scan(tmp_path, spark, fixtures_sf0001):

@@ -44,7 +44,6 @@ def test_violations_match_oracle(spark, loaded):
 
     assert len(engine) > 0, "fixtures inject violations; engine found none"
     assert normalize_violations(engine) == normalize_violations(oracle)
-    result.unpersist()
 
 
 def test_injected_subset_detected(spark, loaded, fixtures_sf0001):
@@ -78,7 +77,6 @@ def test_verdicts_match_oracle(spark, loaded):
     e["row_count"] = e["row_count"].astype(int)
     pd.testing.assert_frame_equal(e, o, check_dtype=False)
     assert (~e["pass"]).any(), "fixtures must produce at least one failing verdict"
-    result.unpersist()
 
 
 def test_determinism_two_runs_identical(spark, loaded):
@@ -90,7 +88,7 @@ def test_determinism_two_runs_identical(spark, loaded):
 
 
 def test_run_suite_placement_and_transitions_options(tmp_path, spark, fixtures_sf0001):
-    """Library-surface parity with the CLI flags: run_suite(check_placement,
+    """Library-surface parity with the CLI flags: run_suite(placement_ts,
     transitions) merges both checks into the sink AND the verdict grid."""
     import os as _os
 
@@ -104,7 +102,7 @@ def test_run_suite_placement_and_transitions_options(tmp_path, spark, fixtures_s
                ("tool", "tool"), ("user", "tool")}
     viol, verd = run_suite(
         tdf, dim, str(tmp_path / "sink"), input_path=table,
-        check_placement=True, transitions=allowed,
+        placement_ts="ts", transitions=allowed,
     )
     grid_rules = {r.rule_id for r in verd.select("rule_id").distinct().collect()}
     assert {"partition_placement", "role_transition"} <= grid_rules

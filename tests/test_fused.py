@@ -2,23 +2,44 @@
 
 import os
 
-from lyra_spark.presets import validate_transcripts
+from lyra_spark.presets import transcript_ruleset, validate_transcripts
 from tests.conftest import normalize_violations
+
+
+def composable_suite(df, dim, ruleset=None, transitions=None, placement_ts=None):
+    """Test oracle: the suite composed from engine.validate and the separate
+    checks.* operators (salted aggregate, broadcast anti-join, windows) —
+    more passes, the same results as the fused plan."""
+    from lyra_spark import checks
+    from lyra_spark.engine import validate
+
+    extra = [
+        checks.uniqueness_violations(df, partition_col="part_date"),
+        checks.referential_violations(df, dim, partition_col="part_date"),
+        checks.monotone_violations(df, partition_col="part_date"),
+    ]
+    extra_ids = [checks.UNIQ_RULE, checks.REF_RULE, checks.MONO_RULE]
+    if transitions is not None:
+        extra.append(checks.transition_violations(df, transitions, partition_col="part_date", ts_col="ts"))
+        extra_ids.append(checks.TRANSITION_RULE)
+    if placement_ts is not None:
+        extra.append(checks.misplaced_violations(df, ts_col=placement_ts, partition_col="part_date"))
+        extra_ids.append(checks.PLACEMENT_RULE)
+    return validate(df, ruleset or transcript_ruleset(), partition_col="part_date",
+                    extra_violations=extra, extra_rule_ids=extra_ids)
 
 
 def test_fused_equals_composable(spark, fixtures_sf0001):
     tdf = spark.read.parquet(os.path.join(fixtures_sf0001, "transcripts"))
     dim = spark.read.parquet(os.path.join(fixtures_sf0001, "tools_dim.parquet"))
-    fused = validate_transcripts(tdf, dim, fused=True)
-    comp = validate_transcripts(tdf, dim, fused=False)
+    fused = validate_transcripts(tdf, dim)
+    comp = composable_suite(tdf, dim)
     assert normalize_violations(fused.violations_sorted().toPandas()) == normalize_violations(
         comp.violations_sorted().toPandas()
     )
     fv = {(str(r["part_date"]), r["rule_id"]): (r["pass"], r["violation_count"], r["row_count"]) for r in fused.verdicts.collect()}
     cv = {(str(r["part_date"]), r["rule_id"]): (r["pass"], r["violation_count"], r["row_count"]) for r in comp.verdicts.collect()}
     assert fv == cv
-    fused.unpersist()
-    comp.unpersist()
 
 
 def test_fused_plan_shape_conv_checks(spark, fixtures_sf0001):
@@ -72,8 +93,8 @@ def test_bucketed_lag_equals_global_window(spark, fixtures_sf0001):
 
 def test_fused_equals_composable_with_null_keys(spark, fixtures_sf0001):
     """NULL conv_id / turn_idx rows are excluded from per-conversation checks
-    on BOTH paths (SEMANTICS.md §keys) — even when the NULL-key rows would
-    collide as duplicates under NULL-safe grouping."""
+    by the suite AND the composable oracle (SEMANTICS.md §keys) — even when
+    the NULL-key rows would collide as duplicates under NULL-safe grouping."""
     from pyspark.sql import functions as F
 
     tdf = spark.read.parquet(os.path.join(fixtures_sf0001, "transcripts"))
@@ -85,8 +106,8 @@ def test_fused_equals_composable_with_null_keys(spark, fixtures_sf0001):
         .withColumn("turn_idx", F.lit(None).cast("int"))
     )
     poisoned = tdf.unionByName(bad)
-    fused = validate_transcripts(poisoned, dim, fused=True)
-    comp = validate_transcripts(poisoned, dim, fused=False)
+    fused = validate_transcripts(poisoned, dim)
+    comp = composable_suite(poisoned, dim)
     fv = normalize_violations(fused.violations_sorted().toPandas())
     cv = normalize_violations(comp.violations_sorted().toPandas())
     assert fv == cv
@@ -127,12 +148,12 @@ def test_fused_transitions_equal_composable(spark, fixtures_sf0001):
 
 
 def test_fused_suite_with_transitions_equals_composable(spark, fixtures_sf0001):
-    """validate_transcripts(transitions=...) — fused and composable paths
+    """validate_transcripts(transitions=...) and the composable oracle
     produce identical violations AND verdict grids with the sequence check on."""
     tdf = spark.read.parquet(os.path.join(fixtures_sf0001, "transcripts"))
     dim = spark.read.parquet(os.path.join(fixtures_sf0001, "tools_dim.parquet"))
-    fused = validate_transcripts(tdf, dim, fused=True, transitions=TRANSITIONS)
-    comp = validate_transcripts(tdf, dim, fused=False, transitions=TRANSITIONS)
+    fused = validate_transcripts(tdf, dim, transitions=TRANSITIONS)
+    comp = composable_suite(tdf, dim, transitions=TRANSITIONS)
     assert normalize_violations(fused.violations_sorted().toPandas()) == normalize_violations(
         comp.violations_sorted().toPandas()
     )
@@ -296,7 +317,7 @@ def test_fused_transitions_still_one_exchange(spark, fixtures_sf0001):
 def test_fused_placement_equals_composable(spark, fixtures_sf0001):
     """placement_ts fuses the placement check into the row-rule scan; its
     violations must be byte-equal to the composable misplaced_violations
-    operator, on both suite paths."""
+    operator, and the suite must equal the composable oracle."""
     from pyspark.sql import functions as F
 
     from lyra_spark import checks
@@ -307,8 +328,8 @@ def test_fused_placement_equals_composable(spark, fixtures_sf0001):
     moved = base.limit(3).withColumn("part_date", F.date_add("part_date", 400))
     null_ts = base.limit(2).withColumn("ts", F.lit(None).cast("timestamp"))
     tdf = base.unionByName(moved).unionByName(null_ts)
-    fused = validate_transcripts(tdf, dim, fused=True, placement_ts="ts")
-    comp = validate_transcripts(tdf, dim, fused=False, placement_ts="ts")
+    fused = validate_transcripts(tdf, dim, placement_ts="ts")
+    comp = composable_suite(tdf, dim, placement_ts="ts")
     fv = normalize_violations(fused.violations_sorted().toPandas())
     assert fv == normalize_violations(comp.violations_sorted().toPandas())
     got = [t for t in fv if t[2] == "partition_placement"]
@@ -323,7 +344,8 @@ def test_fused_placement_equals_composable(spark, fixtures_sf0001):
 def test_fused_placement_sees_raw_values_under_coercion(spark, fixtures_sf0001):
     """Placement judges the STORED value: a ruleset coercion on ts (e.g. a
     default filling NULLs — exactly the rows placement exists to flag) must
-    not mask fused placement violations, and both suite paths must agree."""
+    not mask fused placement violations, and the suite must equal the
+    composable oracle."""
     import datetime
 
     from pyspark.sql import functions as F
@@ -338,8 +360,8 @@ def test_fused_placement_sees_raw_values_under_coercion(spark, fixtures_sf0001):
         required("text", rule_id="text_required"),
         default("ts", datetime.datetime(2024, 1, 1)),
     ])
-    fused = validate_transcripts(tdf, dim, ruleset=rs, fused=True, placement_ts="ts")
-    comp = validate_transcripts(tdf, dim, ruleset=rs, fused=False, placement_ts="ts")
+    fused = validate_transcripts(tdf, dim, ruleset=rs, placement_ts="ts")
+    comp = composable_suite(tdf, dim, ruleset=rs, placement_ts="ts")
     fv = normalize_violations(fused.violations_sorted().toPandas())
     assert fv == normalize_violations(comp.violations_sorted().toPandas())
     placed = [t for t in fv if t[2] == "partition_placement"]
@@ -355,6 +377,9 @@ def test_placement_without_partition_column_raises(spark, fixtures_sf0001):
     dim = spark.read.parquet(os.path.join(fixtures_sf0001, "tools_dim.parquet"))
     with pytest.raises(ValueError, match="placement_ts requires a partition column"):
         validate_transcripts(tdf, dim, partition_col=None, placement_ts="ts")
+    # the suite itself keys its exchange and verdict grid on the partition
+    with pytest.raises(ValueError, match="requires a partition column"):
+        validate_transcripts(tdf, dim, partition_col=None)
 
 
 def test_fused_suite_all_checks_two_scans(spark, fixtures_sf0001):
@@ -382,8 +407,8 @@ def test_fused_partition_from_ts_false_matches_composable(spark, fixtures_sf0001
     exactly like the composable monotone window — byte-equal violations."""
     tdf = spark.read.parquet(os.path.join(fixtures_sf0001, "transcripts"))
     dim = spark.read.parquet(os.path.join(fixtures_sf0001, "tools_dim.parquet"))
-    fused = validate_transcripts(tdf, dim, fused=True, partition_from_ts=False)
-    comp = validate_transcripts(tdf, dim, fused=False)
+    fused = validate_transcripts(tdf, dim, partition_from_ts=False)
+    comp = composable_suite(tdf, dim)
     assert normalize_violations(fused.violations_sorted().toPandas()) == normalize_violations(
         comp.violations_sorted().toPandas()
     )

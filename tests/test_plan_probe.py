@@ -16,6 +16,35 @@ def test_conf_bytes_parses_spark_size_strings():
     assert _conf_bytes("128MB") == 128 << 20
     assert _conf_bytes("64KB") == 64 << 10
     assert _conf_bytes("1g") == 1 << 30
+    # Spark's own byte-string parser also takes tera and peta
+    assert _conf_bytes("1t") == 1 << 40
+    assert _conf_bytes("2TB") == 2 << 40
+    assert _conf_bytes("1p") == 1 << 50
+    assert _conf_bytes("1pb") == 1 << 50
+
+
+def test_planned_scan_tasks_survives_any_max_partition_bytes(spark, tmp_path):
+    """A maxPartitionBytes value the parser takes ('1t') sizes the estimate;
+    one it cannot take yields None (no spread) — never an exception out of
+    spread_if_narrow."""
+    p = str(tmp_path / "conf")
+    spark.range(100).coalesce(1).write.parquet(p)
+    df = spark.read.parquet(p)
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "1t")
+        assert planned_scan_tasks(df) == 1
+        assert spread_if_narrow(df).rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+        # the session rejects an unparseable size at set time; a frame stub
+        # hands one to the estimate directly
+        from types import SimpleNamespace
+
+        conf = SimpleNamespace(get=lambda k, default=None: "lots")
+        stub = SimpleNamespace(inputFiles=df.inputFiles, sparkSession=SimpleNamespace(conf=conf))
+        assert planned_scan_tasks(stub) is None
+    finally:
+        spark.conf.set(key, prev)
 
 
 def test_planned_scan_tasks_single_small_file(spark, tmp_path):
